@@ -31,7 +31,6 @@ from operator import and_
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ._pins import pin
 from .text import (
     hashed_shingle_rows,
     minhash_doc_sigs,

@@ -35,8 +35,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._pins import pin
-
 
 def pagerank(
     edges: DataFrame,
@@ -147,7 +145,7 @@ def pagerank(
         e.join(outdeg, "src")
         .repartition(e.sparkSession.sparkContext.defaultParallelism, "src")
     )
-    ew = pin(ew)
+    ew = ew.localCheckpoint()
     # lazy pin: the n-count below is the first action and computes every
     # partition, which materializes the cache — an eager pin here is one
     # whole extra job (r16)
@@ -157,7 +155,7 @@ def pagerank(
         )
         .distinct()
     )
-    vertices = pin(vertices, eager=False)
+    vertices = vertices.localCheckpoint(eager=False)
     n = vertices.count()
     if n == 0:
         return vertices.withColumn("rank", F.lit(0.0))
@@ -169,7 +167,7 @@ def pagerank(
         vertices["vertex"] == F.col("_s"),
         "left_anti",
     )
-    dangling_verts = pin(dangling_verts)
+    dangling_verts = dangling_verts.localCheckpoint()
     # symmetric / out-degree-closed graphs have NO dangling vertices;
     # detect that once (one cheap action on the checkpointed relation)
     # and skip the per-iteration dangling aggregate entirely — 5 of the
@@ -196,12 +194,12 @@ def pagerank(
                 F.coalesce(_init_expr, _one).alias("rank"),
             )
         )
-        ranks = pin(ranks, eager=False)
+        ranks = ranks.localCheckpoint(eager=False)
     else:
         # lazy: iteration 1's first action (dangling collect or the
         # new_ranks checkpoint) reads every rank partition and
         # materializes the cache — no dedicated job needed (r16)
-        ranks = pin(vertices.withColumn("rank", _one), eager=False)
+        ranks = vertices.withColumn("rank", _one).localCheckpoint(eager=False)
     for i in range(max_iter):
         # mass parked on vertices with no out-edges, redistributed
         # uniformly
@@ -279,7 +277,7 @@ def pagerank(
         # nested plan costs MORE in optimizer/AQE re-planning time than
         # the 5 shallow jobs it saves (8.7–42 s vs 7–8 s at sf0.1) —
         # keep the shallow-job shape.
-        new_ranks = pin(new_ranks)
+        new_ranks = new_ranks.localCheckpoint()
         if tol is not None:
             delta = (
                 ranks.join(

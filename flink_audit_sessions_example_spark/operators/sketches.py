@@ -29,8 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._pins import pin
-
 
 def approx_distinct_by(
     df: DataFrame,
@@ -275,7 +273,7 @@ def heavy_hitters(
     summ = df.select(F.col(key_col).cast("string").alias("_k")).mapInPandas(
         gen, "key string, w long, n long"
     )
-    summ = pin(summ, eager=False)
+    summ = summ.localCheckpoint(eager=False)
     totals = summ.agg(F.sum("n").alias("_N"), F.sum("w").alias("_W"))
     est = (
         summ.where(F.col("key").isNotNull())
@@ -399,7 +397,7 @@ def cms_estimate(
         F.monotonically_increasing_id().alias("_qid"),
         F.struct(*[F.col(c) for c in queries.columns]).alias("_q"),
     )
-    base = pin(base, eager=False)
+    base = base.localCheckpoint(eager=False)
     probes = base.select(
         "_qid",
         "_q",
@@ -618,8 +616,8 @@ def _sketch_stats_relation(a: DataFrame, b: DataFrame, *, k: int):
     is NULL, n=0 < k routes to the theta=1 branch, and the downstream
     count is 0, so the estimate is 0.
     """
-    a = pin(a, eager=False)
-    b = pin(b, eager=False)
+    a = a.localCheckpoint(eager=False)
+    b = b.localCheckpoint(eager=False)
     sa = a.agg(_theta().alias("_ta"), F.count(F.lit(1)).alias("_na"))
     sb = b.agg(_theta().alias("_tb"), F.count(F.lit(1)).alias("_nb"))
     theta = F.least(

@@ -10,8 +10,6 @@ STAGED_ORACLES into the live registry, so every key below is covered by
 The module keeps its name because ~16 test files single-source their
 oracle SQL from the constants defined here (the r9 review killed the
 drifting duplicates); "staged" is historical, not a status.
-``tests/test_staged_registrations.py`` now pins the merge invariant:
-every key here resolves in the live registry to the IDENTICAL objects.
 
 Key naming follows the live registry's family prefixes; the order below
 is the r9 drain-plan priority order (user-facing capabilities first,

@@ -1,11 +1,6 @@
-"""Staged registrations for the r14 window — five new capability
-families, each a COMPLETE driver registration (query callable + DuckDB
-oracle + registered parameters) behind the r13 queue, per the staging
-protocol that drained green in r10 and r11: ``tests/test_staged_r14.py``
-replays every pair with hash parity + non-vacuity on every suite run
-(discovered automatically by ``plans/staging.py`` — the HUGEINT gate,
-window math and the capacity simulator all cover this queue the day
-the module lands).
+"""Registrations for the r14 window — five capability families.
+``tests/test_oracle_parity.py`` replays every (query, oracle) pair with
+hash parity + non-vacuity like any other registered key.
 
 Families: JSON schema profiling (key/cardinality discovery over
 semi-structured payloads), per-node triangle counts (near-dup-cluster

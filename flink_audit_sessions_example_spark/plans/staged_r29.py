@@ -1,8 +1,7 @@
-"""Staged registrations for the r29 window — five new capabilities
-queued behind the r28 batch per the staging protocol that drained
-green in r10–r15: ``tests/test_staged_r29.py`` replays every
-(query, oracle) pair with hash parity + non-vacuity on every suite
-run, so the queue cannot rot while it waits.
+"""Registrations for the r29 window — five capabilities added after
+the r28 batch. ``tests/test_oracle_parity.py`` replays every
+(query, oracle) pair with hash parity + non-vacuity like any other
+registered key; ``tests/test_staged_r29.py`` pins their content.
 
 Families: the last two TPC-H shapes (Q21 waiting-supplier
 EXISTS/NOT-EXISTS double correlation, Q22 scalar-average +

@@ -1,8 +1,7 @@
-"""Staged registrations for the r30 window — five new capabilities
-queued behind the r29 batch per the staging protocol that drained
-green in r10–r15: ``tests/test_staged_r30.py`` replays every
-(query, oracle) pair with hash parity + non-vacuity on every suite
-run, so the queue cannot rot while it waits.
+"""Registrations for the r30 window — five capabilities added after
+the r29 batch. ``tests/test_oracle_parity.py`` replays every
+(query, oracle) pair with hash parity + non-vacuity like any other
+registered key; ``tests/test_staged_r30.py`` pins their content.
 
 Families: per-key OLS trend (closed-form linear regression from six
 EXACT integer moments — slope, intercept, and r² as ratios of exact

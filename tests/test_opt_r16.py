@@ -1,5 +1,5 @@
-"""Optimization round 16 gates: the pin-mode knob, the size-derived
-range-partition default, and the CC/pagerank loop reshapes."""
+"""Optimization round 16 gates: the size-derived range-partition
+default and the CC/pagerank loop reshapes."""
 
 from __future__ import annotations
 
@@ -7,13 +7,14 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from flink_audit_sessions_example_spark.operators import _pins
 from flink_audit_sessions_example_spark.operators import dedup as D
+from flink_audit_sessions_example_spark.operators import quantiles as Q
 from flink_audit_sessions_example_spark.operators.graph import pagerank
 from flink_audit_sessions_example_spark.operators.quantiles import (
     _MAX_RANGE_PARTITIONS,
+    _NO_STATS_SIZE,
     _derived_range_partitions,
-    exact_grouped_percentiles,
+    _range_partitions_for,
 )
 
 
@@ -21,57 +22,15 @@ PAIRS = [Row(id_a=2, id_b=5), Row(id_a=5, id_b=9), Row(id_a=20, id_b=30)]
 EXPECT = {2: 2, 5: 2, 9: 2, 20: 20, 30: 20}
 
 
-def test_pin_mode_disk_matches_local(spark):
-    """The cluster-durability knob (VERDICT r15 item 3): routing every
-    pin through persist(DISK_ONLY) — which keeps lineage, so executor
-    loss recomputes instead of failing — must be result-identical to
-    the localCheckpoint default on a pin-heavy operator chain."""
-    pairs = spark.createDataFrame(PAIRS)
-    vals = spark.createDataFrame(
-        [Row(g="a", v=float(i)) for i in range(20)]
-        + [Row(g="b", v=None)]
-    )
-    base_cc = {
-        r.doc_id: r.cluster_id
-        for r in D.near_dup_clusters(pairs).collect()
-    }
-    base_pct = exact_grouped_percentiles(
-        vals, group_col="g", value_col="v", percentiles=[0.5]
-    ).collect()
-    assert _pins.PIN_MODE == "local"  # the bench/driver default
-    _pins.PIN_MODE = "disk"
-    try:
-        disk_cc = {
-            r.doc_id: r.cluster_id
-            for r in D.near_dup_clusters(pairs).collect()
-        }
-        disk_pct = exact_grouped_percentiles(
-            vals, group_col="g", value_col="v", percentiles=[0.5]
-        ).collect()
-    finally:
-        _pins.PIN_MODE = "local"
-    assert disk_cc == base_cc == EXPECT
-    assert sorted(map(tuple, disk_pct)) == sorted(map(tuple, base_pct))
-
-
-def test_pin_mode_invalid_is_loud(spark):
-    df = spark.range(3)
-    _pins.PIN_MODE = "bogus"
-    try:
-        with pytest.raises(ValueError, match="PIN_MODE"):
-            _pins.pin(df)
-    finally:
-        _pins.PIN_MODE = "local"
-
-
 def test_derived_range_partitions_tracks_input_size(spark):
     """VERDICT r15 item 3: the default range-partition count derives
     from the input size estimate (~256 MB per partition), floored at
     defaultParallelism — never the bare core count at scale. A tiny
     relation floors; a relation whose Catalyst estimate is ~100 GB
-    derives hundreds of partitions; a stat-less estimate (pinned RDD
-    inputs report Long.MaxValue) falls back to the floor instead of
-    clamping to the maximum."""
+    derives hundreds of partitions; a stat-less leaf (an RDD-backed
+    relation reports Long.MaxValue, rescaled by any projection above
+    it) falls back to the floor, while a real estimate too big for the
+    range clamps to the maximum."""
     dp = spark.sparkContext.defaultParallelism
     tiny = spark.range(100).select(
         F.col("id").alias("g"), F.col("id").cast("double").alias("v")
@@ -95,6 +54,44 @@ def test_derived_range_partitions_tracks_input_size(spark):
 
     pinned = tiny.localCheckpoint(eager=False)
     assert _derived_range_partitions(pinned) == dp
+    # a narrowing projection rescales the sentinel to ~2^62 at the root
+    rdd_backed = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1, 2.0)]), "g long, v double"
+    ).select("g")
+    assert _derived_range_partitions(rdd_backed) == dp
+
+    # only the sentinel means "no estimate": any real estimate, however
+    # far past the range (multi-join overshoot), clamps to the maximum
+    assert _range_partitions_for(None, dp) == dp
+    assert _range_partitions_for(1 << 61, dp) == _MAX_RANGE_PARTITIONS
+    assert _range_partitions_for(_NO_STATS_SIZE, dp) == _MAX_RANGE_PARTITIONS
+    assert _range_partitions_for(0, dp) == dp
+
+
+def test_mad_pass_gets_size_derived_partitions(spark, monkeypatch):
+    """mad_outliers' second percentile pass reads a pinned relation, so
+    its range-partition count is derived from the input before the pin
+    and passed explicitly — never left to the pinned leaf's estimate or
+    the bare defaultParallelism."""
+    dp = spark.sparkContext.defaultParallelism
+    derived = dp + 5
+    monkeypatch.setattr(Q, "_derived_range_partitions", lambda df: derived)
+    calls = []
+    real = Q.exact_grouped_percentiles
+
+    def spy(df, **kw):
+        calls.append(kw)
+        return real(df, **kw)
+
+    monkeypatch.setattr(Q, "exact_grouped_percentiles", spy)
+    df = spark.createDataFrame(
+        [Row(g="a", v=float(i)) for i in range(10)] + [Row(g="a", v=100.0)]
+    )
+    flagged = Q.mad_outliers(df, group_col="g", value_col="v").collect()
+    mad_pass = [kw for kw in calls if kw["value_col"] == "_absdev"]
+    assert len(mad_pass) == 1
+    assert mad_pass[0].get("n_range_partitions") == derived
+    assert [r.v for r in flagged if r.is_outlier] == [100.0]
 
 
 def test_cooccurrence_hot_token_stays_linear(spark):

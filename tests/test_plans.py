@@ -3,12 +3,19 @@ broadcast placement) must be visible in `explain`, not just hoped for."""
 
 from __future__ import annotations
 
+import importlib
 import io
+import re
 from contextlib import redirect_stdout
+from pathlib import Path
 
+import pytest
+
+from flink_audit_sessions_example_spark import plans
 from flink_audit_sessions_example_spark.plans import QUERIES
 
 from conftest import SF_DIR
+from registry_checks import assert_keys_live_and_identical, assert_sets_consistent
 
 
 def _plan(spark, key):
@@ -287,24 +294,24 @@ def test_r7_sample_per_group_window_group_limit(spark):
     )
 
 
-def test_front_window_fits_driver_and_resolves():
-    """Rotation-protocol invariants: every front key resolves in the
-    registry (also asserted at import), the front list fits the
-    driver's 50-row correctness window, and the registry leads with
-    exactly the front keys in order."""
-    from flink_audit_sessions_example_spark.plans import (
-        ORACLES,
-        QUERIES,
-        _FRONT_KEYS,
-    )
+# every plans/*.py that assigns a module-level ``*QUERIES`` name
+_PLAN_FILES = sorted(
+    p.stem
+    for p in Path(plans.__file__).parent.glob("*.py")
+    if p.stem != "__init__"
+    and re.search(r"^\w*QUERIES\s*[:=]", p.read_text(), re.M)
+)
 
-    assert len(_FRONT_KEYS) <= 50, (
-        f"{len(_FRONT_KEYS)} front keys overflow the 50-row driver window"
-    )
-    assert len(_FRONT_KEYS) == len(set(_FRONT_KEYS))
-    assert list(QUERIES)[: len(_FRONT_KEYS)] == _FRONT_KEYS
-    # every oracle key is a query key
-    assert set(ORACLES) <= set(QUERIES)
+
+@pytest.mark.parametrize("name", _PLAN_FILES)
+def test_plan_module_is_registered(name):
+    """A plan module that defines queries is listed in PLAN_MODULES,
+    so it is covered the day it lands, and reaches the registry
+    verbatim."""
+    module = importlib.import_module(f"{plans.__name__}.{name}")
+    assert module in plans.PLAN_MODULES, f"{name} is not in PLAN_MODULES"
+    assert_sets_consistent(module)
+    assert_keys_live_and_identical(module)
 
 
 def test_r8_hashed_features_pure_scan_projection(spark):

@@ -1,32 +1,18 @@
-"""The r11 staged→live merge gate. The r11 staging batch
-(``plans/staged_r11.py``) went LIVE in the r11 drain: every
-(query, oracle) pair is now part of the registered surface, so hash
-parity + non-vacuity are covered per-key by
-``tests/test_oracle_parity.py`` like any other registration. What
-remains to pin here is the merge itself: every staged key must resolve
-in the live registry to the IDENTICAL callable and oracle string — a
-divergent copy (e.g. someone re-defining a key in extended.py) would
-silently shadow the tested object with an untested one."""
+"""Registry checks for ``plans/staged_r11.py``: its queries pair up with
+its oracles, and every key resolves in the merged registry to the
+identical callable and oracle string. Hash parity and non-vacuity of
+every key are covered by ``tests/test_oracle_parity.py``."""
 
 from __future__ import annotations
 
-from flink_audit_sessions_example_spark.plans import ORACLES, QUERIES
-from flink_audit_sessions_example_spark.plans.staged_r11 import (
-    STAGED_R11_ORACLES,
-    STAGED_R11_QUERIES,
-)
+from registry_checks import assert_keys_live_and_identical, assert_sets_consistent
+
+from flink_audit_sessions_example_spark.plans import staged_r11
 
 
 def test_staged_r11_sets_are_consistent():
-    assert set(STAGED_R11_QUERIES) == set(STAGED_R11_ORACLES)
+    assert_sets_consistent(staged_r11)
 
 
 def test_staged_r11_keys_are_live_and_identical():
-    for key, fn in STAGED_R11_QUERIES.items():
-        assert key in QUERIES, f"staged key not drained into registry: {key}"
-        assert QUERIES[key] is fn, f"live registry shadows staged query: {key}"
-    for key, sql in STAGED_R11_ORACLES.items():
-        assert key in ORACLES, f"staged oracle not drained: {key}"
-        assert ORACLES[key] is sql, (
-            f"live registry shadows staged oracle: {key}"
-        )
+    assert_keys_live_and_identical(staged_r11)

@@ -1,42 +1,19 @@
-"""The r14 staged→live merge gate. The r14 staging batch
-(``plans/staged_r14.py``) went LIVE in the r12 drain (both queues fit
-the window's free slots at once, as in r11): hash parity + non-vacuity
-are covered per-key by ``tests/test_oracle_parity.py``; this pins the
-merge — every staged key must resolve in the live registry to the
-IDENTICAL callable and oracle string. Also covers the r12 direct
-registrations (``plans/round12.py``), which follow the same
-single-source rule."""
+"""Registry checks for ``plans/staged_r14.py`` and ``plans/round12.py``:
+their queries pair up with their oracles, and every key resolves in
+the merged registry to the identical callable and oracle string.
+Hash parity and non-vacuity of every key are covered by
+``tests/test_oracle_parity.py``."""
 
 from __future__ import annotations
 
-from flink_audit_sessions_example_spark.plans import ORACLES, QUERIES
-from flink_audit_sessions_example_spark.plans.round12 import (
-    ROUND12_ORACLES,
-    ROUND12_QUERIES,
-)
-from flink_audit_sessions_example_spark.plans.staged_r14 import (
-    STAGED_R14_ORACLES,
-    STAGED_R14_QUERIES,
-)
+from registry_checks import assert_keys_live_and_identical, assert_sets_consistent
+
+from flink_audit_sessions_example_spark.plans import round12, staged_r14
 
 
 def test_staged_r14_sets_are_consistent():
-    assert set(STAGED_R14_QUERIES) == set(STAGED_R14_ORACLES)
-    assert set(ROUND12_QUERIES) == set(ROUND12_ORACLES)
+    assert_sets_consistent(round12, staged_r14)
 
 
 def test_staged_r14_keys_are_live_and_identical():
-    for batch_q, batch_o in (
-        (STAGED_R14_QUERIES, STAGED_R14_ORACLES),
-        (ROUND12_QUERIES, ROUND12_ORACLES),
-    ):
-        for key, fn in batch_q.items():
-            assert key in QUERIES, f"key not drained into registry: {key}"
-            assert QUERIES[key] is fn, (
-                f"live registry shadows staged query: {key}"
-            )
-        for key, sql in batch_o.items():
-            assert key in ORACLES, f"oracle not drained: {key}"
-            assert ORACLES[key] is sql, (
-                f"live registry shadows staged oracle: {key}"
-            )
+    assert_keys_live_and_identical(round12, staged_r14)

@@ -1,38 +1,27 @@
-"""The r17 staged→live merge gate. The r17 staging batch
-(``plans/staged_r17.py``) went LIVE in the r13 drain: hash parity +
-non-vacuity are covered per-key by ``tests/test_oracle_parity.py``
-like any other registration. What remains pinned here is the merge
-itself (every staged key must resolve in the live registry to the
-IDENTICAL callable and oracle string — a divergent copy would
-silently shadow the tested object with an untested one) and the
-content non-vacuity checks for degenerate-but-hash-matching
-variants."""
+"""Checks for ``plans/staged_r17.py`` beyond oracle parity. Hash
+parity and non-vacuity of every key are covered by
+``tests/test_oracle_parity.py`` like any other registration; this
+file pins content non-vacuity for the degenerate-but-hash-matching
+variants a broken producer could still emit."""
 
 from __future__ import annotations
 
 import pytest
 from conftest import SF_DIR
+from registry_checks import assert_keys_live_and_identical, assert_sets_consistent
 
-from flink_audit_sessions_example_spark.plans import ORACLES, QUERIES
+from flink_audit_sessions_example_spark.plans import staged_r17
 from flink_audit_sessions_example_spark.plans.staged_r17 import (
-    STAGED_R17_ORACLES,
     STAGED_R17_QUERIES,
 )
 
 
 def test_staged_r17_sets_are_consistent():
-    assert set(STAGED_R17_QUERIES) == set(STAGED_R17_ORACLES)
+    assert_sets_consistent(staged_r17)
 
 
 def test_staged_r17_keys_are_live_and_identical():
-    for key, fn in STAGED_R17_QUERIES.items():
-        assert key in QUERIES, f"staged key not drained into registry: {key}"
-        assert QUERIES[key] is fn, f"live registry shadows staged query: {key}"
-    for key, sql in STAGED_R17_ORACLES.items():
-        assert key in ORACLES, f"staged oracle not drained: {key}"
-        assert ORACLES[key] is sql, (
-            f"live registry shadows staged oracle: {key}"
-        )
+    assert_keys_live_and_identical(staged_r17)
 
 
 def test_staged_r17_content_is_nonvacuous(spark):
